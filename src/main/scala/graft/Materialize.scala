@@ -140,8 +140,8 @@ object Materialize {
   /** Materialize + row count in as few jobs as the mode allows. In local
     * mode (lazy localCheckpoint) the count IS the job that computes and
     * persists the blocks — ONE job replaces the old eager-checkpoint +
-    * Dataset.count() trio. The fixpoint loops (starComponents,
-    * minLabelComponents gates) and every size-gated operator should
+    * Dataset.count() trio. The fixpoint loops (starComponents, the
+    * connectedComponents gate) and every size-gated operator should
     * call this instead of hand-rolling materialize-then-count.
     */
   def withCount[T](ds: Dataset[T]): (Dataset[T], Long) = {

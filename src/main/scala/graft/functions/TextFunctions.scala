@@ -29,9 +29,8 @@ object TextFunctions {
     * the bitwise-deterministic reduction every float aggregate that must
     * hash-match a DuckDB `list_aggregate(list_sort(list(x)), 'sum')`
     * twin uses (t8/t17/g1's trick). One association order, reproduced by
-    * both engines at any partitioning. The per-operator `sortedFoldSum`
-    * helpers forward here so the load-bearing spelling has ONE
-    * definition that cannot drift.
+    * both engines at any partitioning. Every caller uses this ONE
+    * definition, so the load-bearing spelling cannot drift.
     */
   def sortedFoldSum(c: Column): Column =
     aggregate(array_sort(collect_list(c)), lit(0.0), (acc, x) => acc + x)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import graft.Materialize._
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.TextFunctions
 
 /** Graph analytics over relationally-derived edge lists — the iterative
   * family alongside d5's connected components. The engine's stance: a graph
@@ -23,13 +24,6 @@ object Graph {
 
   private def sround(c: Column, digits: Int): Column =
     graft.functions.TextFunctions.sround(c, digits)
-
-  /** Exact-order double summation: fold the values in sorted order so the
-    * result is one specific association order both engines reproduce
-    * (t8/t17's trick — list_sort + list_aggregate 'sum' in DuckDB).
-    */
-  private def sortedFoldSum(c: Column): Column =
-    graft.functions.TextFunctions.sortedFoldSum(c)
 
   /** The bipartite user↔item interaction graph mined from `events`
     * (user_id ↔ props.k), as a distinct directed edge list u→k. g1 and g3
@@ -78,7 +72,7 @@ object Graph {
         .join(rank, edges("src") === rank("node"))
         .select(col("dst").as("node"), (col("rank") / col("deg")).as("c"))
       rank = nodes
-        .join(contribs.groupBy(col("node")).agg(sortedFoldSum(col("c")).as("csum")),
+        .join(contribs.groupBy(col("node")).agg(TextFunctions.sortedFoldSum(col("c")).as("csum")),
           Seq("node"), "left")
         .select(col("node"),
           (lit(0.15) + lit(0.85) * coalesce(col("csum"), lit(0.0))).as("rank"))
@@ -558,7 +552,7 @@ object Graph {
         (lit(1.0) / col("x.deg")).as("ra"))
       .join(e0, Seq("u", "v"), "left_anti")
     cands.groupBy(col("u"), col("v"))
-      .agg(count(lit(1)).as("cn"), sortedFoldSum(col("ra")).as("raw"))
+      .agg(count(lit(1)).as("cn"), TextFunctions.sortedFoldSum(col("ra")).as("raw"))
       .orderBy(col("raw").desc, col("u"), col("v"))
       .limit(100)
       .select(col("u"), col("v"), col("cn"), sround(col("raw"), 6).as("ra_score"))
@@ -1082,7 +1076,7 @@ object Graph {
         .join(rank.filter(col("rank") =!= 0.0), edges("src") === rank("node"))
         .select(col("dst").as("node"), (col("rank") / col("deg")).as("c"))
       rank = nodes
-        .join(contribs.groupBy(col("node")).agg(sortedFoldSum(col("c")).as("csum")),
+        .join(contribs.groupBy(col("node")).agg(TextFunctions.sortedFoldSum(col("c")).as("csum")),
           Seq("node"), "left")
         .select(col("node"),
           (when(col("is_seed"), lit(0.15)).otherwise(lit(0.0))
@@ -1135,25 +1129,21 @@ object Graph {
   // ------------------------------------------------------ g15_cc_star
   /** Connected components by ALTERNATING STARS — the same clusters as d5
     * (identical oracle), computed by [[Dedup.starComponents]]'s
-    * large-star/small-star edge rewriting instead of min-label
-    * propagation. Shipping both algorithms against one oracle is the
-    * point: the label-frontier form wins on small diameters, the star
-    * form on adversarial skew (a hub's neighborhood collapses to its
-    * minimum in one round), and a 100-TB deployment picks per graph.
-    * Runs on d5's verified near-dup pair graph, so the closure oracle
-    * stays bounded by construction.
+    * large-star/small-star edge rewriting (a hub's neighborhood collapses
+    * to its minimum in one round). Runs on d5's verified near-dup pair
+    * graph, so the closure oracle stays bounded by construction.
     *
-    * Cost stance: unlike d5 (which finishes small graphs driver-side and
-    * is ~3× faster at test scale), g15 deliberately iterates the
+    * Cost stance: d5 goes through [[Dedup.connectedComponents]]' size
+    * gate, which finishes graphs this small driver-side (~3× faster at
+    * test scale). g15 calls the star side directly and iterates the
     * distributed path end-to-end — it is the certification that the
-    * no-driver-state algorithm lands the same clusters at every SF. A
-    * production deployment keeps d5's hybrid and swaps in this loop only
-    * past the driver-finish threshold.
+    * side the gate takes above `driverFinishEdges` lands the same
+    * clusters at every SF.
     */
   val g15CcStar: Q = (s, d) => {
-    val comps = Dedup.connectedComponents(
+    val comps = Dedup.starComponents(
       graft.Tables.load(s, d, "documents").select(col("doc_id")),
-      Dedup.d2Pairs(s, d), algoOverride = Some("star"))
+      Dedup.d2Pairs(s, d))
     // skew-safe size annotation (agg + join-back) — see Dedup.withClusterStats
     Dedup.withClusterStats(comps).orderBy("doc_id")
   }

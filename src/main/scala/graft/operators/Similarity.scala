@@ -5,6 +5,7 @@ import graft.Materialize._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
+import graft.functions.TextFunctions
 import graft.functions.VectorFunctions._
 
 /** Similarity search over the `embeddings` table (64-dim float vectors,
@@ -1875,22 +1876,15 @@ object Similarity {
     * oracle CTE chain): candidates and BOTH k-NN neighborhoods live
     * inside the vector's own IVF cell, so the pair bill is Σ|Xc|·|Yc| —
     * the bipartite v16 shape, grown by cell count at corpus scale, never
-    * corpus². The pair stream is by default recomputed per consumer
-    * (three passes: meanK(x), meanK(y), final scoring) — at 100 TB
-    * recomputing a streamed join is cheap, materializing billions of
-    * pairs is not (v16's lesson). For SMALL-cell regimes where the pair
-    * bill fits comfortably (short corpora, heavy quantization),
-    * `spark.graft.bitext.materialize=true` computes the pair stream
-    * ONCE and fences it for all three consumers — same rows by
-    * construction (SimilaritySpec asserts both paths emit identical
-    * output). meanK sums use the sorted-fold idiom (g1's
+    * corpus². The pair stream is recomputed per consumer (three passes:
+    * meanK(x), meanK(y), final scoring) — at 100 TB recomputing a
+    * streamed join is cheap, materializing billions of pairs is not
+    * (v16's lesson). meanK sums use the sorted-fold idiom (g1's
     * bitwise-deterministic double reduction), and the margin is one
     * identically-spelled division, so the twin replays exactly.
     */
   val v20BitextMining: Q = (s, d) => {
     val kNN = 4
-    val matPairs = s.conf.getOption("spark.graft.bitext.materialize")
-      .exists(_.toBoolean)
     val e = emb(s, d)
     val langs = Tables.load(s, d, "documents")
       .select(col("doc_id").as("vec_id"), col("lang"))
@@ -1906,24 +1900,16 @@ object Similarity {
     val ys = corpus.filter(col("lang") === "en")
       .select(col("vec_id").as("y_id"), col("embedding").as("e_y"),
         col("nsq").as("nsq_y"), col("cell"))
-    def pairsStream: DataFrame = xs.join(ys, Seq("cell"))
+    def pairs: DataFrame = xs.join(ys, Seq("cell"))
       .withColumn("sim", cosineWithNorms(dot(col("e_x"), col("e_y")),
         col("nsq_x"), col("nsq_y")))
       .select(col("x_id"), col("y_id"), col("sim"))
-    // conf-gated: fence the pair stream once for all three consumers
-    // (small-cell regimes) vs recompute it per consumer (the default —
-    // the right call when pairs are billions of rows)
-    val pairsShared: Option[DataFrame] =
-      if (matPairs) Some(pairsStream.materialize()) else None
-    def pairs: DataFrame = pairsShared.getOrElse(pairsStream)
-    def sortedFoldSum(c: Column): Column =
-      graft.functions.TextFunctions.sortedFoldSum(c)
     def meanK(key: String, other: String): DataFrame = pairs
       .withColumn("r", row_number().over(Window.partitionBy(col(key))
         .orderBy(col("sim").desc, col(other).asc)))
       .where(col("r") <= kNN)
       .groupBy(col(key))
-      .agg((sortedFoldSum(col("sim")) / count(lit(1))).as(s"m_$key"))
+      .agg((TextFunctions.sortedFoldSum(col("sim")) / count(lit(1))).as(s"m_$key"))
     pairs
       .join(meanK("x_id", "y_id"), "x_id")
       .join(meanK("y_id", "x_id"), "y_id")
@@ -2087,7 +2073,7 @@ object Similarity {
       .crossJoin(broadcast(stats))
       .select(col("q_id"), col("doc_id"), contrib.as("c"))
       .groupBy(col("q_id"), col("doc_id"))
-      .agg(graft.functions.TextFunctions.sortedFoldSum(col("c")).as("score"))
+      .agg(TextFunctions.sortedFoldSum(col("c")).as("score"))
   }
 
   /** The FULL per-query dense and BM25 rank lists (v22/v24's ground-truth

@@ -846,7 +846,7 @@ object CorpusPipeline {
     * the eval set silently contains paraphrases of training data and
     * overstates the model (the leakage t9/t32 audit for, created at
     * split time). Here the unit of assignment is d5's connected
-    * component (d2's verified near-dup pairs, min-label components):
+    * component (d2's verified near-dup pairs, min-id components):
     * every doc in a cluster goes where its cluster's hash goes (~10%
     * eval), so NO near-dup pair can straddle the split by construction.
     *

@@ -25,9 +25,13 @@ object Checks {
     CheckResult(table, "not_null", column,
       df.filter(col(column).isNull).count())
 
+  /** dbt's `unique`: NULL keys are not duplicates of each other — they
+    * belong to `not_null`.
+    */
   def unique(df: DataFrame, table: String, column: String): CheckResult =
     CheckResult(table, "unique", column,
-      df.groupBy(col(column)).count().filter(col("count") > 1).count())
+      df.filter(col(column).isNotNull)
+        .groupBy(col(column)).count().filter(col("count") > 1).count())
 
   def acceptedValues(df: DataFrame, table: String, column: String,
       values: Seq[String]): CheckResult =

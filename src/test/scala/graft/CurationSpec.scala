@@ -556,28 +556,19 @@ class CurationSpec extends SparkSpec {
     }
   }
 
-  test("d5 components: driver union-find ≡ iterative min-label propagation") {
+  test("d5 components: driver union-find ≡ large-star/small-star") {
     val nodes = (1L to 12L).toDF("doc_id")
     // two chains and a triangle: {1..4}, {5,6,7}, {8,9,10}; 11,12 isolated
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (5L, 6L), (6L, 7L),
       (5L, 7L), (8L, 9L), (9L, 10L)).toDF("doc_a", "doc_b")
     def toMap(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long)].collect().toMap
-    val uf = toMap(Dedup.minLabelComponents(nodes, pairs))
-    val iter = toMap(Dedup.minLabelComponents(nodes, pairs, -1L))
+    // default gate: union-find; -1L forces the iterative star side
+    val uf = toMap(Dedup.connectedComponents(nodes, pairs))
+    val iter = toMap(Dedup.connectedComponents(nodes, pairs, -1L))
     assert(uf == iter)
     assert(uf(4L) == 1L && uf(7L) == 5L && uf(10L) == 8L)
     assert(uf(11L) == 11L && uf(12L) == 12L)
-    // the iteration-state partitioning knob is honored (wrong values
-    // fail loudly) and a non-default width leaves the labels unchanged
-    spark.conf.set("spark.graft.cc.iterParts", "3")
-    try {
-      assert(toMap(Dedup.minLabelComponents(nodes, pairs, -1L)) == uf)
-      spark.conf.set("spark.graft.cc.iterParts", "not-a-number")
-      intercept[NumberFormatException] {
-        Dedup.minLabelComponents(nodes, pairs, -1L).collect()
-      }
-    } finally spark.conf.unset("spark.graft.cc.iterParts")
   }
 
   test("t24 code switch: planted mixed doc flags; monolingual docs agree with whole-doc langid") {

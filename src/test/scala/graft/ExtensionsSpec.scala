@@ -164,4 +164,21 @@ class ExtensionsSpec extends AnyFunSuite {
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("*("), s"expected WholeStageCodegen stage:\n$plan")
   }
+
+  test("every spark.graft.* conf read in src/main has a README conf-table row, and vice versa") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    // a key is read where it opens a string literal: "spark.graft.<key>
+    val literal = """\"(spark\.graft\.\w+(?:\.\w+)*)""".r
+    val read = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap(f => literal.findAllMatchIn(Files.readString(f)).map(_.group(1)))
+      .toSet
+    val row = """^\| `(spark\.graft\.[^`]+)` \|""".r
+    val documented = Files.readAllLines(Paths.get("README.md")).asScala
+      .flatMap(l => row.findFirstMatchIn(l).map(_.group(1))).toSet
+    assert(read.nonEmpty)
+    assert(read == documented,
+      s"undocumented: ${read -- documented}; documented but unread: ${documented -- read}")
+  }
 }

@@ -305,7 +305,7 @@ class GraphSpec extends SparkSpec {
       u < v && !e0.contains((u, v)) })
   }
 
-  test("g15 star components: equals min-label CC on chains, hubs and isolates") {
+  test("g15 star components: equals union-find CC on chains, hubs and isolates") {
     import graft.operators.Dedup
     val nodes = (1L to 40L).toDF("doc_id")
     // a long chain (worst case for label propagation), a 20-spoke hub
@@ -317,35 +317,25 @@ class GraphSpec extends SparkSpec {
     val pairs = (chain ++ hub ++ tri).toDF("doc_a", "doc_b")
     def toMap(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long)].collect().toMap
+    // the default gate finishes a graph this small with driver
+    // union-find: the two independent algorithms are each other's
+    // differential reference
     val star = toMap(Dedup.starComponents(nodes, pairs))
-    val label = toMap(Dedup.minLabelComponents(nodes, pairs, -1L))
-    assert(star == label, "two CC algorithms disagree")
+    val uf = toMap(Dedup.connectedComponents(nodes, pairs))
+    assert(star == uf, "two CC algorithms disagree")
     assert(star(10L) == 1L && star(39L) == 20L && star(13L) == 11L)
     assert(star(14L) == 14L && star(40L) == 40L, "isolates must self-root")
 
-    // the algorithm is a POLICY through the single entry point: the
-    // spark.graft.cc.algo conf selects the strategy, and both agree on
-    // the planted BRIDGE-MERGE fixture (one edge fusing the chain, the
-    // triangle and the hub into a single component rooted at 1)
+    // both sides of connectedComponents' size gate agree on the planted
+    // BRIDGE-MERGE fixture (one edge fusing the chain, the triangle and
+    // the hub into a single component rooted at 1); -1L forces star
     val bridged = pairs.union(Seq((10L, 11L), (13L, 20L)).toDF("doc_a", "doc_b"))
-    def viaConf(algo: String) = {
-      spark.conf.set("spark.graft.cc.algo", algo)
-      try toMap(Dedup.connectedComponents(nodes, bridged, -1L))
-      finally spark.conf.unset("spark.graft.cc.algo")
-    }
-    val hybrid = viaConf("hybrid")
-    assert(hybrid == viaConf("star"),
-      "cc.algo strategies disagree on the bridge merge")
-    // minlabel (the differential witness since hybrid's big branch moved
-    // to star in round 15) must agree too — three plans, one contract
-    assert(hybrid == viaConf("minlabel"),
-      "cc.algo=minlabel disagrees on the bridge merge")
-    assert(hybrid(39L) == 1L && hybrid(13L) == 1L && hybrid(10L) == 1L,
+    val ufBridged = toMap(Dedup.connectedComponents(nodes, bridged))
+    assert(ufBridged == toMap(Dedup.connectedComponents(nodes, bridged, -1L)),
+      "union-find and star sides disagree on the bridge merge")
+    assert(ufBridged(39L) == 1L && ufBridged(13L) == 1L && ufBridged(10L) == 1L,
       "bridge edges must fuse chain+triangle+hub into the 1-rooted component")
-    assert(hybrid(14L) == 14L, "isolates stay self-rooted after the merge")
-    intercept[IllegalArgumentException] {
-      Dedup.connectedComponents(nodes, bridged, -1L, Some("bogus")).collect()
-    }
+    assert(ufBridged(14L) == 14L, "isolates stay self-rooted after the merge")
   }
 
   test("g8 plan: propagation rounds are equality joins, never a cartesian") {

@@ -235,6 +235,10 @@ class UberSpec extends SparkSpec {
       .toDF("base_num", "base_name")
     assert(!graft.uber.Checks.unique(badBase, "t", "base_num").passed)
     assert(!graft.uber.Checks.notNull(badBase, "t", "base_num").passed)
+    // NULL keys are not_null's concern: two NULLs are not a duplicate
+    val nullKeys = Seq("A", null, null).toDF("k")
+    assert(graft.uber.Checks.unique(nullKeys, "t", "k").passed)
+    assert(!graft.uber.Checks.notNull(nullKeys, "t", "k").passed)
     val child = Seq("B1", "B9").toDF("fk")
     val parent = Seq("B1").toDF("pk")
     val rel = graft.uber.Checks.relationship(child, "fk", parent, "pk", "t")
